@@ -32,7 +32,7 @@ object Bench {
       // ops cache intermediate tables (signatures, shingles); drop them
       // between queries so one query's cache pressure can't evict
       // another's mid-flight. Also sweep any persistent RDD a failed or
-      // leaky gate left behind (pinned merge frames, checkpoint blocks):
+      // leaky gate left behind (pinned merge frames, cached RDDs):
       // one gate's leak must not slow every gate after it in the shared
       // JVM.
       spark.catalog.clearCache()

@@ -22,7 +22,7 @@ object ScaleData {
       "usage: ScaleData <srcDir> <dstDir> [factor] [tables-csv]")
     val (src, dst) = (args(0), args(1))
     val factor = if (args.length > 2) args(2).toInt else 10
-    // optional table subset, e.g. "orders,customer" — a ProfConstBatch
+    // optional table subset, e.g. "orders,customer" — a join-drain
     // scale point needs two tables, not a full 10x corpus on disk
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").map(_.trim).toSet) else None

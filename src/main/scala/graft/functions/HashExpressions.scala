@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graft.StreamShim.{column, expressionOf}
 import org.apache.spark.sql.types._
 
 /** Native one-pass MinHash signature over a shingle-string array.
@@ -34,7 +34,7 @@ final case class MinHashShingles(child: Expression, numHashes: Int)
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
     case dt => TypeCheckResult.TypeCheckFailure(
-      s"graft_minhash expects array<string>, got ${dt.simpleString}")
+      s"$prettyName expects array<string>, got ${dt.simpleString}")
   }
 
   // per-lane xxhash seeds: `xxhash64(lane, h)` folds left over its
@@ -85,7 +85,7 @@ final case class XxHashLongArray(child: Expression)
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
     case dt => TypeCheckResult.TypeCheckFailure(
-      s"graft_hash_array expects array<string>, got ${dt.simpleString}")
+      s"$prettyName expects array<string>, got ${dt.simpleString}")
   }
 
   override def nullSafeEval(v: Any): Any = {
@@ -123,7 +123,7 @@ final case class WordShingles(child: Expression, n: Int)
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
     case dt => TypeCheckResult.TypeCheckFailure(
-      s"graft_shingles expects string, got ${dt.simpleString}")
+      s"$prettyName expects string, got ${dt.simpleString}")
   }
 
   override def nullSafeEval(v: Any): Any = {
@@ -174,7 +174,7 @@ final case class SimHash64(child: Expression)
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
     case dt => TypeCheckResult.TypeCheckFailure(
-      s"graft_simhash expects array<string>, got ${dt.simpleString}")
+      s"$prettyName expects array<string>, got ${dt.simpleString}")
   }
 
   override def nullSafeEval(v: Any): Any = {
@@ -207,51 +207,19 @@ final case class SimHash64(child: Expression)
 }
 
 object HashExpressions {
-  private def register(): Unit = {
-    val reg = SparkSession.active.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_minhash", es => {
-      val k = es(1) match {
-        case Literal(n: Int, IntegerType) => n
-        case other => throw new IllegalArgumentException(
-          s"graft_minhash numHashes must be an int literal, got $other")
-      }
-      MinHashShingles(es.head, k)
-    }, "built-in")
-    reg.createOrReplaceTempFunction("graft_hash_array",
-      es => XxHashLongArray(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash",
-      es => SimHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingles", es => {
-      val k = es(1) match {
-        case Literal(n: Int, IntegerType) => n
-        case other => throw new IllegalArgumentException(
-          s"graft_shingles n must be an int literal, got $other")
-      }
-      WordShingles(es.head, k)
-    }, "built-in")
-  }
-
   /** Distinct word n-gram shingles of a text column. */
-  def wordShingles(text: Column, n: Int): Column = {
-    register()
-    call_function("graft_shingles", text, lit(n))
-  }
+  def wordShingles(text: Column, n: Int): Column =
+    column(WordShingles(expressionOf(text), n))
 
   /** MinHash signature (lane minima) of a shingle-string array. */
-  def minhashShingles(shingles: Column, numHashes: Int): Column = {
-    register()
-    call_function("graft_minhash", shingles, lit(numHashes))
-  }
+  def minhashShingles(shingles: Column, numHashes: Int): Column =
+    column(MinHashShingles(expressionOf(shingles), numHashes))
 
   /** Per-element xxhash64 of a string array. */
-  def hashArray(strings: Column): Column = {
-    register()
-    call_function("graft_hash_array", strings)
-  }
+  def hashArray(strings: Column): Column =
+    column(XxHashLongArray(expressionOf(strings)))
 
   /** 64-bit SimHash of a word array (shuffle-free). */
-  def simhash64(words: Column): Column = {
-    register()
-    call_function("graft_simhash", words)
-  }
+  def simhash64(words: Column): Column =
+    column(SimHash64(expressionOf(words)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.StreamShim.{column, expressionOf}
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expression for cosine similarity of two numeric
@@ -318,37 +318,19 @@ final case class HyperplaneSig(child: Expression, planes: Int, bands: Int)
 object VectorExpressions {
   /** Banded hyperplane-LSH signature column (array<long>, one value
     * per band) — see [[HyperplaneSig]]. */
-  def hyperplaneSig(vec: Column, planes: Int, bands: Int): Column = {
-    val spark = SparkSession.active
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"graft_hyperplane_sig_${planes}_$bands",
-      es => HyperplaneSig(es.head, planes, bands), "built-in")
-    call_function(s"graft_hyperplane_sig_${planes}_$bands", vec)
-  }
+  def hyperplaneSig(vec: Column, planes: Int, bands: Int): Column =
+    column(HyperplaneSig(expressionOf(vec), planes, bands))
 
-  /** Registers graft's native vector functions in the active session
-    * (idempotent) and returns a cosine-similarity column. */
-  def cosineSimilarity(a: Column, b: Column): Column = {
-    val spark = SparkSession.active
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", es => CosineSimilarity(es.head, es(1)), "built-in")
-    call_function("graft_cosine", a, b)
-  }
+  /** Cosine similarity of two numeric array columns. */
+  def cosineSimilarity(a: Column, b: Column): Column =
+    column(CosineSimilarity(expressionOf(a), expressionOf(b)))
 
   /** Nearest-centroid index by cosine over a literal centroid matrix. */
-  def argMaxCosine(vec: Column, centroids: Column): Column = {
-    val spark = SparkSession.active
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_argmax_cosine", es => ArgMaxCosine(es.head, es(1)), "built-in")
-    call_function("graft_argmax_cosine", vec, centroids)
-  }
+  def argMaxCosine(vec: Column, centroids: Column): Column =
+    column(ArgMaxCosine(expressionOf(vec), expressionOf(centroids)))
 
   /** Nearest-centroid index by squared L2 over a literal centroid
     * matrix (the PQ / IVF-residual assignment step). */
-  def argMinL2(vec: Column, centroids: Column): Column = {
-    val spark = SparkSession.active
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_argmin_l2", es => ArgMinL2(es.head, es(1)), "built-in")
-    call_function("graft_argmin_l2", vec, centroids)
-  }
+  def argMinL2(vec: Column, centroids: Column): Column =
+    column(ArgMinL2(expressionOf(vec), expressionOf(centroids)))
 }

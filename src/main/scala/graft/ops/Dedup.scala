@@ -90,7 +90,7 @@ object Dedup {
     require(numHashes % bands == 0, "bands must divide numHashes")
     // Stage 1 (cached): the shingle table — reused by the verify pass.
     val base = df.select(col(id), col(text))
-      .withColumn("__sh", Shingles.wordShingles(col(text), n))
+      .withColumn("__sh", graft.functions.HashExpressions.wordShingles(col(text), n))
       .cache()
     // Stage 2 (cached): the signature table — ONE native pass per row
     // (graft.functions.MinHashShingles) hashes each shingle once and
@@ -176,7 +176,7 @@ object Dedup {
     val rows = numHashes / bands
     def prep(df: DataFrame): (DataFrame, DataFrame) = {
       val base = df.select(col(id), col(text))
-        .withColumn("__sh", Shingles.wordShingles(col(text), n)).cache()
+        .withColumn("__sh", graft.functions.HashExpressions.wordShingles(col(text), n)).cache()
       val sigd = base.withColumn("__sig",
           graft.functions.HashExpressions.minhashShingles(col("__sh"), numHashes))
         .select(col(id), col("__sig")).cache()
@@ -260,7 +260,7 @@ object Dedup {
     // naive cross join (a pair with J ≥ t > 0 shares ≥ 1 shingle) but
     // the work is Σ_shingle freq² instead of n² — the standard exact
     // similarity-join at scale. One shuffle on shingle, one on pair.
-    val sh = df.select(col(id), Shingles.wordShingles(col(text), n).alias("__sh"))
+    val sh = df.select(col(id), graft.functions.HashExpressions.wordShingles(col(text), n).alias("__sh"))
       .withColumn("__n", size(col("__sh")))
     // join through 8-byte shingle hashes, not 20-char strings: same
     // pair counts (64-bit collisions are negligible against distinct
@@ -428,7 +428,7 @@ object Dedup {
   def simhashNearDup(df: DataFrame, text: String = "text", id: String = "doc_id",
       maxHamming: Int = 12, n: Int = 3, threshold: Double = 0.5,
       chunkBits: Int = 16, candidates: String = "minhash"): DataFrame = {
-    val base = df.select(col(id), Shingles.wordShingles(col(text), n).alias("__sh"))
+    val base = df.select(col(id), graft.functions.HashExpressions.wordShingles(col(text), n).alias("__sh"))
       .cache()
     if (candidates == "chunks") {
       val cand = simhashPairs(df, text, id, maxHamming, bucketed = true, chunkBits)

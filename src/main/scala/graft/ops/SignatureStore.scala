@@ -25,7 +25,7 @@ object SignatureStore {
   private def withSig(docs: DataFrame, text: String, id: String): DataFrame =
     docs.select(col(id), col(text))
       .withColumn("sig", graft.functions.HashExpressions.minhashShingles(
-        Shingles.wordShingles(col(text), 3), NumHashes))
+        graft.functions.HashExpressions.wordShingles(col(text), 3), NumHashes))
 
   /** Creates the store seeded with `docs`' signatures. */
   def create(spark: SparkSession, path: String, docs: DataFrame,
@@ -74,9 +74,9 @@ object SignatureStore {
     // exact verify: shingles recomputed for CANDIDATE rows only
     val out = est
       .join(newSig.select(col(id).alias("new_id"),
-        Shingles.wordShingles(col(text), 3).alias("__sa")), "new_id")
+        graft.functions.HashExpressions.wordShingles(col(text), 3).alias("__sa")), "new_id")
       .join(oldSig.select(col(id).alias("old_id"),
-        Shingles.wordShingles(col(text), 3).alias("__sb")), "old_id")
+        graft.functions.HashExpressions.wordShingles(col(text), 3).alias("__sb")), "old_id")
       .withColumn("jaccard", round(
         size(array_intersect(col("__sa"), col("__sb"))).cast("double") /
           size(array_union(col("__sa"), col("__sb"))), 4))

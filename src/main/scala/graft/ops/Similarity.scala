@@ -11,22 +11,9 @@ object Similarity {
     * precision with deterministic left-to-right accumulation (matches
     * DuckDB's list_cosine_similarity evaluation order for the oracle).
     * Backed by the native single-pass Catalyst expression
-    * [[graft.functions.CosineSimilarity]]; the composed-HOF fallback
-    * below is kept for environments without a registry. */
+    * [[graft.functions.CosineSimilarity]]. */
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.cosineSimilarity(a, b)
-
-  /** Three-traversal `sql.functions` composition of the same formula —
-    * identical accumulation order and results. */
-  def cosineHof(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-    val na = sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, x) => acc + x))
-    val nb = sqrt(aggregate(transform(b, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, x) => acc + x))
-    dot / (na * nb)
-  }
 
   /** B6: brute-force cosine top-k — the exact baseline. The (small)
     * query set is broadcast against the corpus scan; ranking shuffles

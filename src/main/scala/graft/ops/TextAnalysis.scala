@@ -144,7 +144,7 @@ object TextAnalysis {
     def grams(df: DataFrame, idAlias: String) = df.select(
       col(id).alias(idAlias),
       explode(graft.functions.HashExpressions.hashArray(
-        Shingles.wordShingles(col(text), n))).alias("__g"))
+        graft.functions.HashExpressions.wordShingles(col(text), n))).alias("__g"))
     grams(train, "train_id").join(grams(eval, "eval_id"), "__g")
       .groupBy("train_id")
       .agg(countDistinct(col("eval_id")).alias("n_eval_docs"),
@@ -156,21 +156,9 @@ object TextAnalysis {
     * hashes (a 2-hash sketch of the shingle set; same shingles ⇒ same
     * sketch, near-same shingles ⇒ usually same min). */
   def fingerprint(df: DataFrame, text: String = "text"): DataFrame = {
-    val sh = Shingles.wordShingles(col(text), 3)
+    val sh = graft.functions.HashExpressions.wordShingles(col(text), 3)
     df.withColumn("fp_md5", md5(col(text)))
       .withColumn("fp_shingle_min", array_min(transform(sh, s => xxhash64(s))))
       .withColumn("fp_shingle_max", array_max(transform(sh, s => xxhash64(s))))
   }
-}
-
-/** Shared shingling helpers. */
-object Shingles {
-  /** Distinct word n-gram shingles of `text` (space-joined). Documents
-    * shorter than n words contribute a single whole-text shingle.
-    * Backed by the native one-pass [[graft.functions.WordShingles]]
-    * expression (identical output to the composed
-    * split→sequence→slice→array_join→array_distinct HOF chain, without
-    * its four interpreted traversals per row). */
-  def wordShingles(text: Column, n: Int): Column =
-    graft.functions.HashExpressions.wordShingles(text, n)
 }

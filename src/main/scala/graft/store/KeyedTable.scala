@@ -580,7 +580,7 @@ final class KeyedTable private (
 
   /** Rewrites a pending cdf dir's `_commit_version` after a lost claim
     * whose bucket set stayed untouched — the files are batch-sized (≤
-    * `spark.graft.merge.cdfFiles`), so this is one small job instead of
+    * `CdfFiles` per change class), so this is one small job instead of
     * a full re-merge. */
   private def restampCdf(dir: String, newVersion: Long): Unit = {
     val fs = hfs
@@ -1838,8 +1838,6 @@ final class KeyedTable private (
     // orphan data dir; settle any definitively-dead marker before
     // claiming a version
     recoverPendingRebucket(onlyDead = true)
-    if (sys.env.contains("GRAFT_DEBUG_MERGE"))
-      println(s"[merge] ${new org.apache.hadoop.fs.Path(path).getName} batchId=$batchId v=${latestVersion + 1}")
     // generated columns (Delta's GENERATED ALWAYS AS analog,
     // joins.py:875-878): computed from the staged rows when the batch
     // doesn't carry them — so partition pruning on a derived column
@@ -1864,7 +1862,7 @@ final class KeyedTable private (
     // incremental stages produce key-unique batches by construction
     // (join deltas are outer-merged per key, agg deltas are groupBy
     // output) — the within-batch dedup window would be a no-op shuffle
-    val staged0 = truncateLineage((if (uniqueKeys) dataOnly else dedupByKey(dataOnly))
+    val staged0 = Lineage.pin((if (uniqueKeys) dataOnly else dedupByKey(dataOnly))
       .withColumn(KHashCol, keyHashExpr(col))
       .withColumn(BucketCol, pmod(col(KHashCol), lit(meta.numBuckets)).cast("int")))
     // fused deletions, bucketed like the staged batch; their buckets and
@@ -1874,7 +1872,7 @@ final class KeyedTable private (
     delKeyCols.foreach(kc => require(meta.bucketKeys.forall(kc.contains),
       s"fused delete keys must carry all bucket key columns ${meta.bucketKeys.mkString(",")}"))
     val del0 = deleteKeys.map { dk =>
-      truncateLineage(dk.select(delKeyCols.get.map(col): _*).distinct()
+      Lineage.pin(dk.select(delKeyCols.get.map(col): _*).distinct()
         .withColumn(KHashCol, keyHashExpr(col))
         .withColumn(BucketCol, pmod(col(KHashCol), lit(meta.numBuckets)).cast("int")))
     }
@@ -2053,9 +2051,7 @@ final class KeyedTable private (
               // being rewritten (64B/row staged estimate on top); scan
               // parallelism is governed by file splits, untouched.
               val writeParts: Option[Int] = readBytes.map { rb =>
-                val bytesPerPart = spark.conf
-                  .getOption("spark.graft.merge.bytesPerWritePartition")
-                  .map(_.toLong).getOrElse(128L << 20)
+                val bytesPerPart = 128L << 20
                 val est = rb + (stagedCount << 6)
                 math.max(2L, (est + bytesPerPart - 1) / bytesPerPart).toInt
               }
@@ -2111,7 +2107,7 @@ final class KeyedTable private (
         }
         out
       }
-    } finally { releaseStaged(staged0); del0.foreach(releaseStaged) }
+    } finally { Lineage.release(staged0); del0.foreach(Lineage.release) }
   } }
 
   /** Merge plans are bounded-size by construction (one microbatch vs a
@@ -2147,9 +2143,7 @@ final class KeyedTable private (
         // no row counts (rows == -1). Only then: a compressed-bytes
         // estimate UNDER-counts highly compressible key runs (dict/RLE
         // easily < 16 B/row) and would skip a needed sort — r15 advice.
-        val minRowBytes = spark.conf
-          .getOption("spark.graft.merge.sortMinRowBytes")
-          .map(_.toLong).getOrElse(16L)
+        val minRowBytes = 16L
         (byB.keySet ++ stagedByBucket.keySet).exists { b =>
           val (bytes, rows) = byB.getOrElse(b, (0L, 0L))
           val readRows = if (rows >= 0) rows else bytes / minRowBytes
@@ -2158,17 +2152,11 @@ final class KeyedTable private (
     }
   }
 
-  /** Per-phase wall-clock: always accumulated into [[PhaseStats]] (so
-    * bench records carry their own attribution); additionally printed
-    * when `spark.graft.debugTiming=true` — the local perf loop. */
+  /** Per-phase wall-clock, accumulated into [[PhaseStats]] so bench
+    * records carry their own attribution. */
   private def timed[T](label: String)(f: => T): T = {
     val t0 = System.nanoTime()
-    try f finally {
-      val dt = System.nanoTime() - t0
-      PhaseStats.add(label, dt)
-      if (spark.conf.getOption("spark.graft.debugTiming").contains("true"))
-        System.err.println(f"[gtime] $label ${dt / 1e9}%.3f")
-    }
+    try f finally PhaseStats.add(label, System.nanoTime() - t0)
   }
 
   private def withMergeConf[T](f: => T): T = {
@@ -2245,12 +2233,10 @@ final class KeyedTable private (
       .withColumn(SideCol, lit("d"))
     // cdf rows don't need per-bucket dirs (downstream flattens them to
     // a file list); folding the bucket id modulo a small file budget
-    // caps each commit at ~cdfFiles change files PER CHANGE CLASS. The
+    // caps each commit at ~CdfFiles change files PER CHANGE CLASS. The
     // class (upsert / delete / preimage) rides in the fold index —
-    // b = class*cdfFiles + bucket%cdfFiles — so every change file holds
+    // b = class*CdfFiles + bucket%CdfFiles — so every change file holds
     // exactly one class and its footer row count IS the class count
-    val cdfFiles = math.max(1, spark.conf
-      .getOption("spark.graft.merge.cdfFiles").map(_.toInt).getOrElse(4))
     val classExpr = when(col("_change_type") === "delete", 1)
       .when(col("_change_type") === "update_preimage", 2)
       .otherwise(0)
@@ -2258,7 +2244,7 @@ final class KeyedTable private (
       .withColumn(KHashCol, lit(null).cast(LongType))
       .withColumn("_commit_version", lit(newVersion))
       .withColumn(BucketCol,
-        (classExpr * cdfFiles + pmod(bucketExpr(col), lit(cdfFiles))).cast("int"))
+        (classExpr * CdfFiles + pmod(bucketExpr(col), lit(CdfFiles))).cast("int"))
       .withColumn(SideCol, lit("c"))
     val tmp = s"$path/_tmp_$dir"
     val shuffled = dataSide.unionByName(cdfSide)
@@ -2278,29 +2264,17 @@ final class KeyedTable private (
     // hashSort=false for rewrites small enough to stay one file per
     // bucket, saving the per-merge sort stage in the incremental hot
     // loop; large rewrites (and any legacy/unknowable input) sort.
-    val doHashSort = hashSort &&
-      !spark.conf.getOption("spark.graft.merge.sortFiles").contains("false")
     // zero-duration marker phases: bench records then carry the count of
     // sorted vs unsorted writes, so sort-gate regressions are visible in
     // any record without a debug rerun
     PhaseStats.add(if (!sortKeys.isEmpty) "writeSortKeys"
-      else if (doHashSort) "writeSortHash" else "writeNoSort", 0L)
+      else if (hashSort) "writeSortHash" else "writeNoSort", 0L)
     val ordered =
       if (!sortKeys.isEmpty)
         shuffled.sortWithinPartitions(
           Seq(col(SideCol), col("b")) ++ sortKeys: _*)
-      else if (!doHashSort) shuffled
+      else if (!hashSort) shuffled
       else shuffled.sortWithinPartitions(col(SideCol), col("b"), col(KHashCol))
-    // plan-evidence hook (no effect unless set): dumps this write's
-    // formatted plan, one file per commit — how plans/r16/*_write_*.txt
-    // were produced (toggles: merge.truncateLineage, the sort gate)
-    spark.conf.getOption("spark.graft.debugPlanDir").foreach { d =>
-      val dir0 = new java.io.File(d); dir0.mkdirs()
-      val p = new java.io.File(dir0, s"write_v$newVersion.txt")
-      java.nio.file.Files.writeString(p.toPath,
-        ordered.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-    }
     // 2M-row default split (~50-200 MB files at typical row widths —
     // Delta's file-size band), NOT Spark's effectively-unbounded one:
     // an unbounded rewrite consolidates a bucket into ONE file whose
@@ -2323,13 +2297,11 @@ final class KeyedTable private (
     // concurrent tasks would otherwise churn ~8 MB × 32 of allocations
     // per file wave — the r15 scan_zone_skip 8-vs-32-core anti-scaling.
     // A 2k-row file meets the same fpp with a ~4 KB sketch.
-    val bloomMaxBytes = spark.conf
-      .getOption("spark.graft.merge.bloomMaxBytes").map(_.toLong)
-      .getOrElse {
-        val want = fileRows * 2 // ~1.8 B/row rounded up to the next pow2
-        math.min(1L << 22, math.max(1L << 12,
-          java.lang.Long.highestOneBit(math.max(1L, want - 1)) << 1))
-      }
+    val bloomMaxBytes = {
+      val want = fileRows * 2 // ~1.8 B/row rounded up to the next pow2
+      math.min(1L << 22, math.max(1L << 12,
+        java.lang.Long.highestOneBit(math.max(1L, want - 1)) << 1))
+    }
     // adaptive candidates are max.bytes/2^i: reach down to 512 B so a
     // file far smaller than the cap pays a proportionally tiny sketch
     // (at the 4 MB budget that is the 14 candidates shipped in r15)
@@ -2355,7 +2327,7 @@ final class KeyedTable private (
         bloomCandidates.toString)
       // fpp drives how many files a SKETCH probe falsely keeps: the
       // expected count is (staged hashes × fpp), so the probe tier is
-      // capped at sketchProbeMaxRows staged rows and fpp is set so
+      // capped at sketchMax (2000) staged rows and fpp is set so
       // cap × fpp ≈ 2 — tight enough that a point-update wave's write
       // cost stays a couple of files regardless of table size
       .option(s"parquet.bloom.filter.fpp#$KHashCol", "0.001")
@@ -2381,7 +2353,7 @@ final class KeyedTable private (
         fs.listStatus(bDir.getPath).filter(_.getPath.getName.endsWith(".parquet")).foreach { f =>
           val target = new org.apache.hadoop.fs.Path(dest, s"b$b-${f.getPath.getName}")
           fs.rename(f.getPath, target)
-          cdfOut ::= (b.toInt / cdfFiles, target)
+          cdfOut ::= (b.toInt / CdfFiles, target)
         }
       }
     }
@@ -2410,12 +2382,6 @@ final class KeyedTable private (
     val byClass = counted.groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
     (byClass.getOrElse(0, 0L), byClass.getOrElse(1, 0L), byClass.getOrElse(2, 0L))
   }
-
-  /** See [[Lineage]]: row-block materialization + plan truncation for
-    * the per-commit staged/delete frames. */
-  private def truncateLineage(df: DataFrame): DataFrame = Lineage.pin(df)
-
-  private def releaseStaged(df: DataFrame): Unit = Lineage.release(df)
 
   /** Latest-wins dedup of a batch by full key (joins.py:556-561). */
   private def dedupByKey(df: DataFrame): DataFrame = {
@@ -2769,7 +2735,7 @@ final class KeyedTable private (
     * the stored hash column — footer tail reads only, NO column-scan
     * job, so the probe's cost is sketch-sized, not candidate-bytes-
     * proportional (the last table-size-proportional per-commit cost for
-    * insert-heavy drains; ProfConstBatch r13/r14). Per row group only
+    * insert-heavy drains; bench/CONSTBATCH_r13/r14). Per row group only
     * the staged hashes inside the group's [min,max] span are tested
     * (commit files are hash-sorted, so the binary-searched slice is
     * small). Returns the candidate INDICES to keep; a bloom false
@@ -2871,14 +2837,12 @@ final class KeyedTable private (
           }
       }
     }
-    val exactMax = spark.conf.getOption("spark.graft.merge.exactPruneMaxRows")
-      .map(_.toLong).getOrElse(4000000L)
+    val exactMax = 4000000L
     // the refinement join is one extra (cheap, broadcast) Spark job per
     // merge — only worth launching when the candidate files it could
     // skip hold real bytes. Below the threshold, reading every
     // range-candidate outright is faster than planning around it.
-    val pruneMinBytes = spark.conf.getOption("spark.graft.merge.exactPruneMinBytes")
-      .map(_.toLong).getOrElse(32L << 20)
+    val pruneMinBytes = 32L << 20
     val indexed = cand.toSeq.zipWithIndex
     val (hit, missed) =
       if (stagedCount <= exactMax &&
@@ -2902,8 +2866,8 @@ final class KeyedTable private (
     // matching no existing row, so range pruning alone rewrites the
     // whole table per drain sub-batch (write cost ∝ table size — the
     // one curve that must stay flat at 100 TB; measured 3.0× per-commit
-    // write growth for 3× data at constant batch bytes, ProfConstBatch
-    // r13). One narrow extra job reads ONLY the bucket-key columns of
+    // write growth for 3× data at constant batch bytes,
+    // bench/CONSTBATCH_r13.jsonl). One narrow extra job reads ONLY the bucket-key columns of
     // the surviving candidates and keeps the files holding at least one
     // staged hash. Safe: key-equal ⇒ hash-equal (keyHashExpr is over
     // bucketKeys, which update matches, placeholder upgrades, and fused
@@ -2920,7 +2884,7 @@ final class KeyedTable private (
     // for a 50k-row drain sub-batch (n·fpp ≈ every file; measured: the
     // naive all-sketch probe regressed sf3 insert drains right back to
     // table-proportional writes), decisive for point/small batches
-    // (n ≤ sketchProbeMaxRows keeps n·fpp ≈ 2 with the 0.001 write-side
+    // (n ≤ sketchMax keeps n·fpp ≈ 2 with the 0.001 write-side
     // fpp). Small staged batches therefore probe DRIVER-SIDE against
     // the footer-resident sketches (no read job, LRU-cached — the case
     // whose exact probe had to re-scan every range-candidate's hash
@@ -2929,8 +2893,7 @@ final class KeyedTable private (
     // candidates and amortized by the batch's own size.
     val matchMin = spark.conf.getOption("spark.graft.merge.matchPruneMinBytes")
       .map(_.toLong).getOrElse(32L << 20)
-    val sketchMax = spark.conf.getOption("spark.graft.merge.sketchProbeMaxRows")
-      .map(_.toLong).getOrElse(2000L)
+    val sketchMax = 2000L
     // ADAPTIVE sketch tier (r14 verdict #6): the fixed staged-row cut
     // above is a proxy for the real decision variable — the EXPECTED
     // FALSELY-KEPT file count, ≈ Σ_files (staged hashes inside the
@@ -2947,12 +2910,8 @@ final class KeyedTable private (
     // batch — the case the naive all-sketch design regressed on (r14)
     // — computes an estimate ≈ every file and keeps the exact probe.
     // The hard row cap bounds the probe's own driver-side hash collect.
-    val sketchHardMax = spark.conf
-      .getOption("spark.graft.merge.sketchProbeHardMaxRows")
-      .map(_.toLong).getOrElse(262144L)
-    val targetFalseKept = spark.conf
-      .getOption("spark.graft.merge.sketchTargetFalseKept")
-      .map(_.toDouble).getOrElse(4.0)
+    val sketchHardMax = 262144L
+    val targetFalseKept = 4.0
     val sketchFpp = 1e-3 // keep in sync with writeFused's write-side fpp
     // Estimated staged hashes falling inside one file's span, from
     // state already in hand at plan time: per-bucket staged
@@ -2984,9 +2943,7 @@ final class KeyedTable private (
     // false-keep probability crosses the cap are routed to the exact
     // read probe instead — whose cost is that file's hash column, paid
     // precisely where the sketch is least trustworthy.
-    val pKeepMax = spark.conf
-      .getOption("spark.graft.merge.sketchMaxFalseKeepP")
-      .map(_.toDouble).getOrElse(0.05)
+    val pKeepMax = 0.05
     def sketchable(b: Int, e: FileEntry): Boolean =
       e.bloom && math.min(1.0, inSpanEst(b, e) * sketchFpp) <= pKeepMax
     def estFalseKept(cand: Seq[((Int, FileEntry), Int)]): Double =
@@ -3179,6 +3136,8 @@ object KeyedTable {
   private[store] val BucketCol = "__bucket"
   private[store] val SideCol = "__side"
   private[store] val KHashCol = "__khash"
+  // change files per change class in one commit (writeFused's cdf fold)
+  private[store] val CdfFiles = 4
   private[store] val CheckpointInterval = 10L
   // how long an unreferenced _cdf_pending dir must sit unmodified before
   // recovery/vacuum may treat its attempt as dead (override with

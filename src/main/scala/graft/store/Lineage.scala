@@ -7,89 +7,46 @@ import org.apache.spark.storage.StorageLevel
   *
   * The merge/drain hot loops pin small per-commit frames (staged
   * batches, merge-join outputs, retraction key sets) purely so ONE
-  * commit's handful of actions share the computation. Two mechanisms:
+  * commit's handful of actions share the computation. [[pin]]
+  * persists the frame (`MEMORY_AND_DISK`) and returns it re-expressed
+  * as its cached `InMemoryRelation` LEAF: downstream actions re-analyze
+  * a single leaf instead of the frame's upstream tree, and the cache
+  * blocks recompute through the relation's child plan on block loss or
+  * a read after [[release]].
   *
-  *   - `persist(MEMORY_AND_DISK)` re-expressed as its cached
-  *     InMemoryRelation LEAF — the DEFAULT. Columnar cache blocks,
-  *     recomputable on block loss, and downstream actions re-analyze a
-  *     single leaf instead of the frame's upstream tree
-  *     (`spark.graft.merge.pinLeaf=false` keeps the plain persisted
-  *     frame with its full plan).
-  *   - lazy `localCheckpoint` (opt-in:
-  *     `spark.graft.merge.truncateLineage=true`) — plain row blocks and
-  *     a `LogicalRDD` leaf plan, killing per-commit Catalyst re-analysis
-  *     of the frame's upstream tree. r15 shipped this as the default and
-  *     the ground-truth bench regressed 1.74× at local[32]
-  *     (PERF_r15.json): the full-width checkpoint row blocks of every
-  *     pinned frame outweigh the saved planning time under concurrent
-  *     tasks sharing one heap, and released checkpoint frames are
-  *     NON-RECOMPUTABLE — any path touching a frame after release (or a
-  *     lost block) fails hard where persist recomputes. Flipped back to
-  *     persist-by-default in r16; the toggle remains for cluster-scale
-  *     deployments whose driver-side planning cost dominates and whose
-  *     executors don't share the driver heap.
-  *
-  * The pin-time mode is recorded per frame so [[release]] frees exactly
-  * what [[pin]] created: a conf read at release time could disagree with
-  * the pin-time decision, and the checkpoint-block sweep must never walk
-  * a persisted frame's full plan tree (it could unpersist caller-owned
-  * RDD-backed inputs).
+  * A pin owns only the cache entry it created. A frame the caller had
+  * already cached, or a plan another pin already caches (the cache
+  * matches canonically equal plans), is read through that entry and
+  * left alone by [[release]].
   */
 object Lineage {
-  private final val ModeCheckpoint = 1
-  private final val ModePersistLeaf = 2
-  private final val ModePersist = 3
-  private final case class PinInfo(mode: Int, original: DataFrame)
-
-  // Dataset-identity → pin-time mode + the frame to unpersist, written
-  // at pin, removed at release. WEAK keys: a pin whose owner drops the
-  // frame without releasing (e.g. an op returning its final pinned
-  // frame to a caller that only reads it) must not grow this map for
-  // the JVM lifetime — the entry expires with the frame, and the block
-  // sweep / clearCache frees the storage. Dataset does not override
-  // equals, so WeakHashMap's equals-based lookup is reference identity
-  // here. Synchronized: drains may run from several threads.
+  // leaf → the original frame whose cache entry this pin created (the
+  // CacheManager entry is keyed on the original's plan; unpersisting
+  // the leaf view would miss it). WEAK keys: a pin whose owner drops
+  // the frame without releasing must not grow this map for the JVM
+  // lifetime — the entry expires with the leaf, and the block sweep /
+  // clearCache frees the storage. The original never references its
+  // leaf, so the value cannot keep its own key alive. Dataset does not
+  // override equals, so the lookup is reference identity.
+  // Synchronized: drains may run from several threads.
   private val pins = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame, PinInfo]())
+    new java.util.WeakHashMap[DataFrame, DataFrame]())
 
   def pin(df: DataFrame): DataFrame = {
-    val conf = df.sparkSession.conf
-    if (conf.getOption("spark.graft.merge.truncateLineage").contains("true")) {
-      val out = df.localCheckpoint(eager = false)
-      pins.put(out, PinInfo(ModeCheckpoint, df))
-      out
-    } else {
-      df.persist(StorageLevel.MEMORY_AND_DISK)
-      // plan-tree truncation on top of persist (default; guide §3.3):
-      // re-expressing the frame as its cached InMemoryRelation LEAF
-      // makes every downstream action re-analyze one leaf instead of
-      // the frame's full upstream tree — the per-commit Catalyst cost —
-      // while keeping persist's recomputability (post-release or
-      // block-loss reads recompute through the relation's child plan,
-      // where r15's localCheckpoint failed hard).
-      // spark.graft.merge.pinLeaf=false falls back to the plain
-      // persisted frame (the A/B toggle).
-      val out =
-        if (conf.getOption("spark.graft.merge.pinLeaf").contains("false")) df
-        else org.apache.spark.sql.graft.StreamShim.cachedLeaf(df).getOrElse(df)
-      pins.put(out, PinInfo(if (out eq df) ModePersist else ModePersistLeaf, df))
-      out
+    val owned = df.storageLevel == StorageLevel.NONE
+    if (owned) df.persist(StorageLevel.MEMORY_AND_DISK)
+    org.apache.spark.sql.graft.StreamShim.cachedLeaf(df) match {
+      case Some(leaf) =>
+        if (owned) pins.put(leaf, df)
+        leaf
+      // not in the cache right after persist: a concurrent uncache of
+      // an equal plan — nothing is left to free, read the plain frame
+      case None => df
     }
   }
 
-  /** Frees a [[pin]]ned frame. Persist modes: unpersist the ORIGINAL
-    * frame (the CacheManager entry is keyed on its plan — unpersisting
-    * the leaf view would miss it and leak). Checkpoint mode: the shim
-    * sweep frees the checkpoint RDD blocks (`Dataset.unpersist` cannot
-    * reach them — they'd otherwise linger until the ContextCleaner's
-    * GC-driven sweep); the swept plan is the single `LogicalRDD` leaf
-    * pin created, never a caller's tree. Safe to call twice (the second
-    * call degrades to a no-op unpersist). */
+  /** Frees the cache entry a [[pin]] created; a no-op for pins that
+    * did not create one and for a second release. */
   def release(df: DataFrame): Unit =
-    pins.remove(df) match {
-      case null => df.unpersist()
-      case PinInfo(ModeCheckpoint, _) =>
-        org.apache.spark.sql.graft.StreamShim.unpersistTruncated(df)
-      case PinInfo(_, original) => original.unpersist()
-    }
+    Option(pins.remove(df)).foreach(_.unpersist())
 }

@@ -369,8 +369,7 @@ final class JoinedStream(
       val conf = spark.conf
       val minBytes = conf.getOption("spark.graft.join.staticPrune.minBytes")
         .map(_.toLong).getOrElse(256L << 20)
-      val maxKeys = conf.getOption("spark.graft.join.staticPrune.maxKeys")
-        .map(_.toLong).getOrElse(1L << 20)
+      val maxKeys = 1L << 20 // probe rows past this keep the full scan
       if (!static.isPlainTable || probeRows <= 0 || probeRows > maxKeys ||
           static.table.liveManifestBytes < minBytes) full
       else {
@@ -435,8 +434,6 @@ final class JoinedStream(
             if (vRow.isNullAt(1)) -1L else vRow.getLong(1),
             vRow.getLong(7), vRow.getLong(8))
       }
-      if (sys.env.contains("GRAFT_DEBUG_MERGE"))
-        println(s"[mb] batch=$batchId rows=$n lv=$lMax rv=$rMax")
       if (n == 0L) return // empty microbatch: nothing to do
       val (lDeletes, rDeletes) = (lDeleted, rDeleted)
       // pin statics at the batch's max commit version for deterministic
@@ -656,8 +653,8 @@ final class JoinedStream(
       def downgrade(srcKeys: DataFrame, side: String, nonOwning: Stream,
           idxSubPath: String): Unit = graft.store.PhaseStats.time("downgrade") {
         // sub-phase job labels (gate / aff / rederive; the fused
-        // delete+merge tags itself graft:merge:*) — ProfCdc attributes
-        // the pass's scale behavior per step from these
+        // delete+merge tags itself graft:merge:*) attribute the pass's
+        // jobs per step in the Spark UI and event log
         spark.sparkContext.setJobDescription("graft:join:downgrade:gate")
         val sk = graft.store.Lineage.pin(srcKeys)
         try {

@@ -44,17 +44,22 @@ object StreamShim {
       : org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
-  /** The just-persisted frame re-expressed as its cached
-    * `InMemoryRelation` LEAF: downstream actions then re-analyze and
-    * re-optimize a single leaf instead of the frame's full upstream
-    * tree (the per-commit Catalyst cost `Lineage.pin` exists to cut),
-    * while keeping persist semantics — columnar cache blocks that
-    * RECOMPUTE through the relation's child plan on block loss or
-    * post-release reads (unlike a localCheckpoint, which fails hard).
+  /** Classic-mode Column over a Catalyst expression — how graft's
+    * native expressions bind, without a name in the session function
+    * registry (`ExpressionUtils.column` is `private[sql]`). */
+  def column(e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : org.apache.spark.sql.Column =
+    classic.ExpressionUtils.column(e)
+
+  /** The cached frame re-expressed as its `InMemoryRelation` LEAF:
+    * downstream actions then re-analyze and re-optimize a single leaf
+    * instead of the frame's full upstream tree (the per-commit Catalyst
+    * cost `Lineage.pin` exists to cut), while keeping persist semantics
+    * — columnar cache blocks that RECOMPUTE through the relation's
+    * child plan on block loss or post-release reads.
     * `CacheManager.lookupCachedData` and `Dataset.ofRows` are
     * `private[sql]`, hence this living in the shim. None when the frame
-    * is somehow not in the cache (caller falls back to the plain
-    * persisted frame). */
+    * is not in the cache. */
   def cachedLeaf(df: DataFrame): Option[DataFrame] = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val spark = ds.sparkSession
@@ -74,18 +79,4 @@ object StreamShim {
       classic.Dataset.ofRows(spark, leaf)
     }
   }
-
-  /** Frees the storage blocks behind a `localCheckpoint`ed DataFrame.
-    * `Dataset.unpersist` only talks to the CacheManager, so checkpoint
-    * RDD blocks otherwise linger until the ContextCleaner's GC-driven
-    * sweep — unbounded storage creep across a long merge loop. The
-    * `LogicalRDD` leaf the checkpoint wraps is `private[sql]`, hence
-    * this living in the shim. Call only when the frame is provably done
-    * with (lineage is truncated; a later read would fail). */
-  def unpersistTruncated(df: DataFrame): Unit =
-    df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 }

@@ -105,7 +105,7 @@ class OpsSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val sig = docs.select(col("doc_id"),
       graft.functions.HashExpressions.minhashShingles(
-        Shingles.wordShingles(col("text"), 3), 64).alias("s"))
+        graft.functions.HashExpressions.wordShingles(col("text"), 3), 64).alias("s"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val agree = sig(1L).zip(sig(2L)).count(p => p._1 == p._2)
     // J = 12/14 ≈ 0.857 → E[agree] ≈ 55, σ ≈ 2.8; pin at > 40 (5σ),

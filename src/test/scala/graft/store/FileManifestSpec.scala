@@ -257,7 +257,7 @@ class FileManifestSpec extends AnyFunSuite {
     // while matching no existing row. The probe must detect zero true
     // matches and carry all seed files by reference, appending the
     // inserts as new files — the property that keeps per-commit drain
-    // write cost flat in TABLE size at 100 TB (ProfConstBatch r13).
+    // write cost flat in TABLE size at 100 TB (bench/CONSTBATCH_r13.jsonl).
     val t = tmp()
     val df = (1L to 20000L).map(i => (i, i * 1.0)).toDF("id", "v")
     val kt = KeyedTable.create(spark, t, df.schema, keys = Seq("id"), numBuckets = 1)

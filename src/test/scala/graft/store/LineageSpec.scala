@@ -6,12 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 
-/** r16 pins for the merge-frame materialization modes (Lineage):
-  * default = persist + InMemoryRelation-leaf plan truncation, opt-outs
-  * for the plain persisted frame and the r15 localCheckpoint path. The
-  * invariants that burned r15: released frames must still be READABLE
-  * (recompute, not fail), and release must free the cache entry of the
-  * ORIGINAL frame (not the leaf view). */
+/** [[Lineage]] pins: persist + InMemoryRelation-leaf plan truncation.
+  * Released frames must still be READABLE (recompute, not fail),
+  * release must free the cache entry of the ORIGINAL frame (not the
+  * leaf view), and only a cache entry the pin created. */
 class LineageSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -37,28 +35,15 @@ class LineageSpec extends AnyFunSuite {
     assert(pinned.count() == 1000L)
   }
 
-  test("pinLeaf=false: plain persisted frame, release unpersists") {
-    spark.conf.set("spark.graft.merge.pinLeaf", "false")
+  test("pin of a caller-persisted frame leaves the caller's cache alone") {
+    val df = frame().persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val df = frame()
       val pinned = Lineage.pin(df)
-      assert(pinned eq df, "opt-out must return the original frame")
       assert(pinned.count() == 1000L)
       Lineage.release(pinned)
-      assert(df.storageLevel == StorageLevel.NONE)
-    } finally spark.conf.unset("spark.graft.merge.pinLeaf")
-  }
-
-  test("truncateLineage=true: checkpoint path still works and releases") {
-    spark.conf.set("spark.graft.merge.truncateLineage", "true")
-    try {
-      val df = frame()
-      val pinned = Lineage.pin(df)
-      assert(pinned.count() == 1000L)
-      assert(pinned.queryExecution.analyzed.collectLeaves()
-        .head.getClass.getSimpleName == "LogicalRDD")
-      Lineage.release(pinned) // frees checkpoint blocks via the shim sweep
-    } finally spark.conf.unset("spark.graft.merge.truncateLineage")
+      assert(df.storageLevel != StorageLevel.NONE,
+        "release must not unpersist a cache entry the pin did not create")
+    } finally df.unpersist()
   }
 
   test("double release is harmless") {

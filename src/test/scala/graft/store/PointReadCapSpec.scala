@@ -9,8 +9,8 @@ import java.nio.file.Files
 
 /** [[KeyedTable.snapshotForKeys]] collects the probe-key hash set
   * driver-side for file-granular pruning. That collect is CAPPED by
-  * `spark.graft.pointRead.maxKeys` (default 1M, mirroring
-  * staticPrune.maxKeys): past the cap the read keeps bucket-set
+  * `spark.graft.pointRead.maxKeys` (default 1M, mirroring the join's
+  * static-prune probe-row cap): past the cap the read keeps bucket-set
   * pruning (the bucket-id collect is modulus-bounded, never
   * key-bounded) and filters with a distributed semi-join instead of a
   * broadcast — a million-key probe or an unbudgeted first drain over a

@@ -21,9 +21,10 @@ actual texts; the window only bounds which pairs get verified.
 dedup_simhash's gate contract additionally bounds recall to simhash
 Hamming ≤ 7 — reproducing Spark's xxhash64-based simhash inside DuckDB
 is not possible, so when a signature dump is supplied
-(`--sigs <parquet>`, written by `graft.ProfDedup <sfDir>
-sigsOut=<path>`; the signature VALUES are spec-pinned bit-equal to an
-independent shuffle formulation) the simhash expectation becomes
+(`--sigs <parquet>`: the (doc_id, simhash) rows of
+`graft.ops.Dedup.simhash(graft.Tables.documents(spark, sfDir))` written
+as parquet, e.g. from spark-shell; the signature VALUES are spec-pinned
+bit-equal to an independent shuffle formulation) the simhash expectation becomes
 windowed-truth ∩ hamming ≤ 7, with the hamming filter recomputed in
 DuckDB from those signatures. Without --sigs, dedup_simhash is checked
 against the unfiltered windowed truth (exact only on corpora where
